@@ -109,7 +109,8 @@ def shingle_hashes(text: Column, n: int = 3) -> Column:
       short/empty strings;
     - the weight vector is PRE-REDUCED mod P (``31^e mod P``), so every
       term stays below 2^52 and the 12-term dot below 2^56 — no int64
-      overflow for ANY code point / n. By congruence
+      overflow for any code point as long as n ≤ 2048 (n terms below
+      2^52 sum below 2^63; real shingle sizes are n ≤ 12). By congruence
       ``Σ cp·31^e ≡ Σ cp·(31^e mod P) (mod P)``, so the result is
       identical to the expression form's end-mod wherever that form is
       defined (its un-reduced fold raises ANSI long overflow first on

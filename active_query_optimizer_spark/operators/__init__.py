@@ -31,23 +31,60 @@ for _mod in ("dedup", "similarity", "text", "multimodal", "statsops",
         if e.name != f"{__name__}.{_mod}":
             raise
 
-#: Driver-facing registration order (see module docstring). ROUND-13 layout
-#: (steady-state cadence):
-#: - round-13 window (NOW FIRST): the 30 r09-tail entries the linter
-#:   flagged at round-13 assembly (age 4 — byte-for-byte the linter's
-#:   offender list, re-derived from the CORRECTNESS_r01–r12 union) + 20
-#:   spares from the head of the r10 window (age 3, breaching at r14);
-#: - remaining 30 r10-green entries: the round-14 window opens with these;
-#: - round-11 window (r11-green, due r15), then the round-12 window
-#:   (freshest, r12-green, due r16) at the very end.
+#: Driver-facing registration order (see module docstring). ROUND-15 layout
+#: (two-step rotation: round 14 never rotated, so 80 entries were overdue at
+#: round-15 assembly against a 50-slot window):
+#: - round-15 window (NOW FIRST): the 30 r10-green entries (age 5) + the
+#:   first 20 r11-green entries (age 4) of the linter's offender list;
+#: - the other 30 r11-green entries: the committed round-15 leftovers
+#:   (``PLANNED_LEFTOVERS[15]`` in ``tests/test_driver_rotation.py``); the
+#:   round-16 window opens with these;
+#: - the round-13 window (green again in r14, which kept it; due r18), then
+#:   the round-12 window (r12-green, due r16) at the very end.
 #: The 50-entry window is an observed driver behavior, treated as
 #: best-effort: entries past it keep their prior-round rows and the local
 #: sweep (``tools/driver_sim.py`` -> SWEEP_r*.json, sf0.01 + sf0.1)
 #: re-verifies the whole registry when operator source changes mid-round
 #: (see SWEEP_r*.json artifacts for the rounds where it ran).
 _DRIVER_ORDER = [
-    # ---- ROUND-13 WINDOW (50): the 30 r09-tail entries (age 4 — the
-    #      linter's round-13 offender list, verbatim) ...
+    # ---- ROUND-15 WINDOW (50): the 30 r10-green entries (age 5) ...
+    "tpch_q11_important_parts", "tpch_q16_supplier_variety",
+    "tpch_q20_promo_volume_suppliers", "tpch_q2_min_cost_supplier",
+    "tpch_q4_priority_exists", "tpch_q6_forecast_revenue",
+    "tpch_q8_market_share", "tpch_q9_product_profit", "window_dense_rank_ties",
+    "zorder_layout_profile", "hypertable_rollup_daily", "text_bpe_token_count",
+    "text_langid", "text_fingerprint", "text_lang_summary",
+    "text_pattern_flags", "text_top_terms", "dedup_simhash_pairs",
+    "dedup_simhash", "dedup_ngram_jaccard", "dedup_embedding_cosine",
+    "ann_cosine_topk", "multimodal_bytes_features", "stats_numeric_ranges",
+    "stats_topk_frequent_values", "stats_distinct_values",
+    "stats_column_cardinalities", "plan_selection_argmin",
+    "spearman_rank_corr", "stream_windowed_event_counts",
+    #      ... and the first 20 r11-green entries (age 4):
+    "transitive_equijoin_count", "skew_salted_join_count",
+    "asof_join_events_orders", "range_join_value_bands",
+    "outer_join_count_per_customer", "in_subquery_count",
+    "exchange_reuse_pairs", "sort_limit_topk", "window_topk_per_group",
+    "groupby_agg", "ann_lsh_bucketed", "ann_ivf_topk",
+    "coreset_select_embeddings", "dedup_minhash_lsh", "pack_sequences_budget",
+    "stream_sessionize_events", "embedding_kmeans_step",
+    "embedding_kmeans_two_steps", "stats_price_deciles_sketch",
+    "sample_stratified_sketch",
+    # -------------- driver window boundary (50) --------------
+    # ---- the other 30 r11-green entries (age 4): round-15 planned
+    #      leftovers; the round-16 window opens with exactly these.
+    "rollup_agg", "scan_filter_count", "projection_join", "hash_join_count",
+    "merge_join_count", "nested_loop_theta_count", "self_join_count",
+    "pred_or", "semi_join_exists", "anti_join_not_exists",
+    "cohort_retention_weekly", "cross_source_overlap",
+    "decontam_ngram_overlap", "dedup_fingerprint_survivors",
+    "embedding_dim_stats", "embedding_gram_upper", "embedding_norm_histogram",
+    "embedding_outlier_flags", "embedding_pca_project",
+    "embedding_quantize_int8", "event_funnel_steps", "events_anomaly_days",
+    "events_pivot_daily", "events_resample_hourly_gapfill", "knn_label_vote",
+    "multimodal_feature_extract", "multimodal_frame_sample",
+    "multimodal_resize_grid", "pii_flag_docs", "quality_repetition_rules",
+    # ---- ROUND-13 WINDOW (50, r13- and r14-green, due again at r18):
     "tpch_q10_returned_items", "tpch_q12_shipmode_priority",
     "tpch_q13_customer_distribution", "tpch_q14_promo_share",
     "tpch_q15_top_supplier", "tpch_q18_large_orders",
@@ -61,58 +98,16 @@ _DRIVER_ORDER = [
     "full_outer_reconciliation", "graph_bfs_hops",
     "incremental_agg_maintenance", "join_bloom_prefilter_count",
     "order_gap_stats_per_customer", "orders_rfm_segments",
-    "orders_yoy_monthly_growth",
-    #      ... the 20 spare slots (head of the r10 window, age 3,
-    #      breaching at round 14):
-    "pareto_front_orders", "pricing_summary", "props_extract_sum",
-    "quality_length_percent_rank", "sample_balanced_per_lang",
-    "sample_stratified_proportional", "sample_temperature_mixture",
-    "scd2_history_build", "setsim_join_prefix", "sevenway_join_count",
-    "stats_corr_qty_discount", "stats_length_percentiles_approx",
-    "stats_median_disc_per_group", "stats_reservoir_sample_profile",
-    "stats_revenue_gini", "text_chunk_overlap", "text_edit_distance_pairs",
-    "text_quality_scores", "text_token_stats", "text_vocab_stats",
-    # -------------- driver window boundary (50) --------------
-    # ---- remaining r10-green tail (30): age 3 now; the round-14 window
-    #      opens with exactly these 30 (+20 spares from the r11 window
-    #      below, due at r15).
-    "tpch_q11_important_parts", "tpch_q16_supplier_variety",
-    "tpch_q20_promo_volume_suppliers", "tpch_q2_min_cost_supplier",
-    "tpch_q4_priority_exists", "tpch_q6_forecast_revenue",
-    "tpch_q8_market_share", "tpch_q9_product_profit",
-    "window_dense_rank_ties", "zorder_layout_profile",
-    "hypertable_rollup_daily", "text_bpe_token_count", "text_langid",
-    "text_fingerprint", "text_lang_summary", "text_pattern_flags",
-    "text_top_terms", "dedup_simhash_pairs", "dedup_simhash",
-    "dedup_ngram_jaccard", "dedup_embedding_cosine", "ann_cosine_topk",
-    "multimodal_bytes_features", "stats_numeric_ranges",
-    "stats_topk_frequent_values", "stats_distinct_values",
-    "stats_column_cardinalities", "plan_selection_argmin",
-    "spearman_rank_corr", "stream_windowed_event_counts",
-    # ---- ROUND-11 WINDOW (50, r11-green, due again at r15):
-    "transitive_equijoin_count", "skew_salted_join_count",
-    "asof_join_events_orders", "range_join_value_bands",
-    "outer_join_count_per_customer", "in_subquery_count",
-    "exchange_reuse_pairs", "sort_limit_topk", "window_topk_per_group",
-    "groupby_agg", "ann_lsh_bucketed", "ann_ivf_topk",
-    "coreset_select_embeddings", "dedup_minhash_lsh", "pack_sequences_budget",
-    "stream_sessionize_events", "embedding_kmeans_step",
-    "embedding_kmeans_two_steps", "stats_price_deciles_sketch",
-    "sample_stratified_sketch", "rollup_agg", "scan_filter_count",
-    "projection_join", "hash_join_count", "merge_join_count",
-    "nested_loop_theta_count", "self_join_count", "pred_or",
-    "semi_join_exists", "anti_join_not_exists", "cohort_retention_weekly",
-    "cross_source_overlap", "decontam_ngram_overlap",
-    "dedup_fingerprint_survivors", "embedding_dim_stats",
-    "embedding_gram_upper", "embedding_norm_histogram",
-    "embedding_outlier_flags", "embedding_pca_project",
-    "embedding_quantize_int8", "event_funnel_steps", "events_anomaly_days",
-    "events_pivot_daily", "events_resample_hourly_gapfill", "knn_label_vote",
-    "multimodal_feature_extract", "multimodal_frame_sample",
-    "multimodal_resize_grid", "pii_flag_docs", "quality_repetition_rules",
-    # ---- ROUND-12 WINDOW (50, freshest — r12-green, due again at
-    #      r16): rotated to the tail after CORRECTNESS_r12.json landed
-    #      green (48 exact-hash + 2 rows-only-by-design, 0 failures).
+    "orders_yoy_monthly_growth", "pareto_front_orders", "pricing_summary",
+    "props_extract_sum", "quality_length_percent_rank",
+    "sample_balanced_per_lang", "sample_stratified_proportional",
+    "sample_temperature_mixture", "scd2_history_build", "setsim_join_prefix",
+    "sevenway_join_count", "stats_corr_qty_discount",
+    "stats_length_percentiles_approx", "stats_median_disc_per_group",
+    "stats_reservoir_sample_profile", "stats_revenue_gini",
+    "text_chunk_overlap", "text_edit_distance_pairs", "text_quality_scores",
+    "text_token_stats", "text_vocab_stats",
+    # ---- ROUND-12 WINDOW (50, r12-green, due again at r16):
     "quality_token_freq_score", "sample_weighted_mix", "seq_length_histogram",
     "split_assign_hash", "stats_histogram_equiwidth",
     "stats_join_size_cm_sketch", "stats_join_size_exact",
@@ -120,16 +115,15 @@ _DRIVER_ORDER = [
     "stream_conversion_attribution", "tfidf_top_terms_per_source",
     "tpch_q3_shipping_priority", "tpch_q5_region_volume",
     "union_distinct_keys", "window_running_total", "ann_ivf_pq_topk",
-    "broadcast_join_count", "case_when_bucket_agg",
-    "cluster_centroid_vectors", "count_min_multi_agg", "cube_agg",
-    "date_trunc_monthly", "datetime_parts_agg",
-    "decontam_substring_containment", "dedup_embedding_clusters",
-    "dedup_minhash_clusters", "distinct_count", "docrank_neardup_pagerank",
-    "embedding_lang_centroids", "events_first_touch",
-    "events_unpivot_daily", "graph_triangle_count", "groupby_having",
-    "grouping_sets_agg", "intersect_except_keys", "latest_order_per_customer",
-    "min_projection_job_style", "pred_between", "pred_epoch_int",
-    "pred_eq_neq", "pred_in", "pred_like", "pred_not_like",
+    "broadcast_join_count", "case_when_bucket_agg", "cluster_centroid_vectors",
+    "count_min_multi_agg", "cube_agg", "date_trunc_monthly",
+    "datetime_parts_agg", "decontam_substring_containment",
+    "dedup_embedding_clusters", "dedup_minhash_clusters", "distinct_count",
+    "docrank_neardup_pagerank", "embedding_lang_centroids",
+    "events_first_touch", "events_unpivot_daily", "graph_triangle_count",
+    "groupby_having", "grouping_sets_agg", "intersect_except_keys",
+    "latest_order_per_customer", "min_projection_job_style", "pred_between",
+    "pred_epoch_int", "pred_eq_neq", "pred_in", "pred_like", "pred_not_like",
     "pred_null_checks", "pred_range_ops", "pred_ts_literal",
     "scalar_subquery_small_qty", "stats_column_cardinalities_approx",
     "stats_null_profile", "stats_price_deciles",

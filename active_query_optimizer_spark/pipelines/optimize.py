@@ -3,19 +3,32 @@
 The reference's test path scores each query's candidate plans and executes
 the argmin (``Lero/lero_test.py:82-112``); this module is that loop as an
 API: given SQL and a trained ranker, enumerate Spark hint variants
-(``plans/explore``), featurize each *un-executed* physical plan (estimates,
-no timing), score with the tree-conv net, and return/execute the winner.
+(``plans/explore``), featurize each *un-executed* physical plan (operator
+types, relations and output widths; nothing has run, so every node's
+``numOutputRows`` reads 0), score with the tree-conv net, and
+return/execute the winner.
 
-Planning cost is a few Catalyst plan compilations + one tiny net forward —
-milliseconds against queries that run seconds; and unlike the labeling
-path, nothing here executes more than the chosen plan.
+Train/serve skew, left open: labels carry the executed plan's actual row
+counts (``plans.explore.label_query``) while served plans carry
+``rows = 0``, so the row feature the ranker learned from is constant at
+serve time. Closing it (estimated rows at serve time, or rows dropped from
+training) changes which plans are picked, so it needs its own A/B.
+
+Cost of choosing, as measured by the benchmark's ``lero`` workload
+(``perfbench/``: sf0.01, an 8-query generated pool, three join hints,
+4-core host): a median of about 110 ms of client CPU per query (the
+Python thread plus the JVM thread serving its py4j calls), almost all of
+it plan enumeration — parsing and analyzing each distinct SQL text,
+optimizing and planning each form, and walking each distinct plan over
+py4j; featurization and the net forward take about 6 ms. Unlike the labeling path,
+nothing here executes more than the chosen plan.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Row, SparkSession
 
 from ..model.lero import LeroModel
 from ..plans.explore import (HINT_STRATEGIES, Candidate, _conf_overrides,
@@ -54,9 +67,12 @@ def choose_plan(spark: SparkSession, sql: str, model: LeroModel,
 
 
 def run_optimized(spark: SparkSession, sql: str, model: LeroModel,
-                  strategies: tuple[str, ...] = HINT_STRATEGIES) -> DataFrame:
+                  strategies: tuple[str, ...] = HINT_STRATEGIES) -> list[Row]:
     """Execute ``sql`` under the learned-best join-strategy hints (and the
-    candidate's session-conf knobs, when the winner is a conf variant)."""
+    candidate's session-conf knobs, when the winner is a conf variant) and
+    return its rows. The rows are collected inside the conf context:
+    planning is lazy, so a frame returned from it would plan and run under
+    the session's default confs instead of the winner's."""
     best, _ = choose_plan(spark, sql, model, strategies)
     with _conf_overrides(spark, best.conf):
-        return spark.sql(best.sql)
+        return spark.sql(best.sql).collect()

@@ -35,19 +35,21 @@ HINT_STRATEGIES = ("BROADCAST", "MERGE", "SHUFFLE_HASH", "SHUFFLE_REPLICATE_NL")
 
 #: Conf-knob exploration dimensions — the closest Spark analog of Lero's
 #: PG cardinality-scaling knobs (the Lero paper steers the native optimizer
-#: through its tuning GUCs; Spark's equivalents are the join-threshold and
-#: adaptive-execution switches). Each yields a candidate planned under a
-#: temporarily overridden session conf; the override is re-applied when the
-#: candidate is executed/labeled.
+#: through its tuning GUCs; Spark's equivalent here is the join-threshold
+#: switch plus the runtime-filter switch). Each yields a candidate planned
+#: under a temporarily overridden session conf; the override is re-applied
+#: when the candidate is executed/labeled. Adaptive execution is not a
+#: dimension: candidates are compared on ``sparkPlan``, which is built
+#: before ``InsertAdaptiveSparkPlan``, so an AQE-off form plans like the
+#: default and deduplicates away (no cached label bundle holds one).
 CONF_VARIANTS: tuple[tuple[str, dict[str, str]], ...] = (
     ("nobroadcast", {"spark.sql.autoBroadcastJoinThreshold": "-1"}),
-    ("noaqe", {"spark.sql.adaptive.enabled": "false"}),
     # runtime bloom-filter join pushdown off: Spark injects a bloom
     # filter from the build side into the probe scan when stats look
-    # favorable — whether that wins is data-dependent, i.e. exactly the
-    # kind of knob a learned ranker should see both settings of. A query
-    # where the toggle doesn't change the plan dedups away by
-    # fingerprint, costing nothing.
+    # favorable (a probe-side scan of at least 10 GB by default) —
+    # whether that wins is data-dependent, i.e. exactly the kind of knob
+    # a learned ranker should see both settings of. A query where the
+    # toggle doesn't change the plan dedups away, costing nothing.
     ("nobloom", {"spark.sql.optimizer.runtime.bloomFilter.enabled":
                  "false"}),
 )
@@ -178,7 +180,16 @@ def plan_variants(spark: SparkSession, sql: str,
     """Distinct physical-plan candidates for one query: Catalyst default +
     one variant per hint strategy applied to every relation + FROM-order
     rotations (join-order exploration) + session-conf knob variants,
-    deduplicated by pre-execution plan fingerprint."""
+    deduplicated by pre-execution plan fingerprint.
+
+    Duplicate forms repeat no parsing and no py4j walk: a form with the
+    text and confs of an earlier one is skipped, each distinct SQL text is
+    parsed and analyzed once (conf-knob forms re-plan the default form's
+    analyzed plan under their confs), and a form whose ``sparkPlan`` has
+    the same result as an earlier form's is dropped before its plan is
+    walked. Equal canonical plans have the same node classes, shape,
+    output widths and scans, and never-run plans read ``numOutputRows``
+    0, so such a form could only repeat an earlier fingerprint."""
     aliases = sorted(extract_aliases(sql))
     seen: set[str] = set()
     out: list[Candidate] = []
@@ -188,13 +199,29 @@ def plan_variants(spark: SparkSession, sql: str,
         [(f"rot{r}", reorder_from_clause(sql, r), {})
          for r in range(1, join_order_rotations + 1)] +
         [(name, sql, conf) for name, conf in conf_variants])
+    #: (SQL text, confs) of the forms met so far: a repeat (e.g. a rotation
+    #: by the table count) plans exactly as its first occurrence did
+    met: set[tuple[str, tuple[tuple[str, str], ...]]] = set()
+    #: SQL text -> its analyzed plan
+    analyzed: dict[str, Any] = {}
+    #: semanticHash -> sparkPlans of the forms walked so far
+    walked: dict[int, list[Any]] = {}
     for name, text, conf in forms:
+        form = (text, tuple(sorted(conf.items())))
+        if form in met:
+            continue
+        met.add(form)
         try:
             with _conf_overrides(spark, conf):
-                df = spark.sql(text)
+                df = _planned_frame(spark, text, analyzed)
+                jplan = df._jdf.queryExecution().sparkPlan()
+                key = jplan.semanticHash()
+                if any(jplan.sameResult(p) for p in walked.get(key, ())):
+                    continue
                 tree = capture_plan(df, executed=False)
         except Exception:
             continue  # hint form Catalyst refuses outright
+        walked.setdefault(key, []).append(jplan)
         fp = plan_fingerprint(tree)
         if fp in seen:
             continue
@@ -202,6 +229,21 @@ def plan_variants(spark: SparkSession, sql: str,
         out.append(Candidate(variant=name, sql=text, fingerprint=fp,
                              plan=tree, conf=conf))
     return out
+
+
+def _planned_frame(spark: SparkSession, text: str,
+                   analyzed: dict[str, Any]) -> DataFrame:
+    """A frame of ``text`` that plans under the session's current confs:
+    parsed and analyzed on first sight, afterwards a fresh
+    ``QueryExecution`` over the cached analyzed plan (the conf knobs act
+    in optimization and physical planning, not in analysis)."""
+    plan = analyzed.get(text)
+    if plan is None:
+        df = spark.sql(text)
+        analyzed[text] = df._jdf.queryExecution().analyzed()
+        return df
+    return DataFrame(spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, plan), spark)
 
 
 #: a timed-out candidate is labeled at ``penalty * timeout`` ms — the

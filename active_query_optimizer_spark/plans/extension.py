@@ -28,7 +28,7 @@ import os
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Row, SparkSession
 
 from ..model.lero import LeroModel
 from .explore import Candidate, _conf_overrides
@@ -163,8 +163,10 @@ def choose_mode(spark: SparkSession, sql: str, model: LeroModel,
 
 
 def run_optimized(spark: SparkSession, sql: str,
-                  model: LeroModel) -> DataFrame:
-    """Execute ``sql`` under the learned-best extension mode."""
+                  model: LeroModel) -> list[Row]:
+    """Execute ``sql`` under the learned-best extension mode and return its
+    rows, collected inside the mode's conf context (a lazy frame returned
+    from it would run under the session's mode instead)."""
     best, _ = choose_mode(spark, sql, model)
     with _conf_overrides(spark, best.conf):
-        return spark.sql(best.sql)
+        return spark.sql(best.sql).collect()

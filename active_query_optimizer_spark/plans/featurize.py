@@ -175,6 +175,13 @@ def capture_plan(df: DataFrame, executed: bool = True) -> PlanNode:
                 return 0.0
         return 0.0
 
+    def build_children(jnode: Any) -> list[PlanNode]:
+        jkids = jnode.children()  # one round trip for the Seq, not per child
+        out: list[PlanNode] = []
+        for i in range(jkids.size()):
+            out.extend(build(jkids.apply(i)))
+        return out
+
     def build(jnode: Any) -> list[PlanNode]:
         name = jnode.nodeName()
         if name == "AdaptiveSparkPlan":
@@ -182,14 +189,9 @@ def capture_plan(df: DataFrame, executed: bool = True) -> PlanNode:
         if "QueryStage" in name:
             return build(jnode.plan())
         if name.startswith("WholeStageCodegen") or name in _TRANSPARENT:
-            out: list[PlanNode] = []
-            for i in range(jnode.children().size()):
-                out.extend(build(jnode.children().apply(i)))
-            return out
+            return build_children(jnode)
 
-        children: list[PlanNode] = []
-        for i in range(jnode.children().size()):
-            children.extend(build(jnode.children().apply(i)))
+        children = build_children(jnode)
 
         if name.startswith("Scan"):
             op, relation = "Seq Scan", _scan_relation(jnode)

@@ -79,7 +79,7 @@ model.fit([fg.transform_tree(c.plan) for c in cands],
 best, scored = XT.choose_mode(spark, plain, model)
 assert len(scored) >= len(cands)  # per-join deviations join the space
 assert {c.fingerprint for c in cands} <= {c.fingerprint for c, _ in scored}
-rows = XT.run_optimized(spark, plain, model).collect()
+rows = XT.run_optimized(spark, plain, model)
 assert rows[0][0] > 0
 # the mode override did not leak into the session
 assert spark.conf.get(XT.MODE_KEY) == "off"
@@ -111,7 +111,7 @@ m2.fit([fg2.transform_tree(p) for p in all_plans],
 best2, scored2 = XT.choose_mode(spark, two, m2)
 assert any(c.variant.startswith("ext-join:") for c, _ in scored2), (
     [c.variant for c, _ in scored2])
-assert XT.run_optimized(spark, two, m2).collect()[0][0] > 0
+assert XT.run_optimized(spark, two, m2)[0][0] > 0
 assert spark.conf.get(XT.MODES_KEY, None) in (None, "")
 
 # unified candidate space: with the extension loaded, choose_plan scores

@@ -197,7 +197,7 @@ def test_learned_plan_choice_runs_best_variant(spark):
     best, scored = choose_plan(spark, sql, model)
     assert len(scored) >= 2
     assert best.fingerprint in {c.fingerprint for c, _ in scored}
-    got = run_optimized(spark, sql, model).collect()[0][0]
+    got = run_optimized(spark, sql, model)[0][0]
     expect = spark.sql(sql).collect()[0][0]
     assert got == expect
 

@@ -86,6 +86,25 @@ PLANNED_LEFTOVERS = {
         "tpch_q9_product_profit", "window_dense_rank_ties",
         "zorder_layout_profile",
     },
+    # round 14 never rotated: at round-15 assembly 30 r10-green (age 5)
+    # and 50 r11-green (age 4) entries were overdue against 50 slots; the
+    # window takes the 30 r10 entries and the first 20 r11 entries, these
+    # 30 r11 entries are the committed leftovers (operators/__init__.py)
+    15: {
+        "anti_join_not_exists", "cohort_retention_weekly",
+        "cross_source_overlap", "decontam_ngram_overlap",
+        "dedup_fingerprint_survivors", "embedding_dim_stats",
+        "embedding_gram_upper", "embedding_norm_histogram",
+        "embedding_outlier_flags", "embedding_pca_project",
+        "embedding_quantize_int8", "event_funnel_steps",
+        "events_anomaly_days", "events_pivot_daily",
+        "events_resample_hourly_gapfill", "hash_join_count",
+        "knn_label_vote", "merge_join_count", "multimodal_feature_extract",
+        "multimodal_frame_sample", "multimodal_resize_grid",
+        "nested_loop_theta_count", "pii_flag_docs", "pred_or",
+        "projection_join", "quality_repetition_rules", "rollup_agg",
+        "scan_filter_count", "self_join_count", "semi_join_exists",
+    },
 }
 
 

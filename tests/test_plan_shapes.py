@@ -283,9 +283,12 @@ def test_load_for_compute_repartition_is_conditional(spark, tmp_path):
 
     from active_query_optimizer_spark.catalog import load_for_compute
 
+    # one file per core: the scan estimate then reaches parallelism/2 at
+    # any defaultParallelism, not only at the session's usual 8
+    n_files = max(8, spark.sparkContext.defaultParallelism)
     src = spark.range(0, 10_000).selectExpr(
         "id AS doc_id", "repeat('x', 64) AS text")
-    (src.repartition(8).write.mode("overwrite")
+    (src.repartition(n_files).write.mode("overwrite")
         .parquet(os.path.join(str(tmp_path), "documents.parquet")))
 
     wide = load_for_compute(spark, str(tmp_path), "documents", "doc_id")

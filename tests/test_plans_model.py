@@ -300,8 +300,8 @@ def test_join_order_rotation_variants(spark):
 
 def test_conf_knob_variants_widen_candidates(spark):
     """SURVEY §7.3c / Lero knob analog: session-conf dimensions
-    (autoBroadcastJoinThreshold, AQE) add genuinely distinct plans and
-    the overrides never leak out of planning."""
+    (autoBroadcastJoinThreshold, runtime bloom filters) add genuinely
+    distinct plans and the overrides never leak out of planning."""
     from active_query_optimizer_spark.catalog import register_views
 
     register_views(spark, SF_SMALL)
@@ -318,6 +318,49 @@ def test_conf_knob_variants_widen_candidates(spark):
     # broadcast join plan distinct from the default broadcast one
     fps = {c.fingerprint for c in with_knobs}
     assert len(fps) == len(with_knobs)
+
+
+class _MergeJoinRanker:
+    """Stub ranker: scores a plan 0 when it sort-merge joins, else 1."""
+
+    class fg:
+        @staticmethod
+        def transform_tree(plan):
+            return plan
+
+    @staticmethod
+    def predict(trees):
+        return np.array([0.0 if "Merge Join" in t.preorder_ops() else 1.0
+                         for t in trees])
+
+
+def test_run_optimized_executes_conf_pick_under_its_confs(spark, monkeypatch):
+    """A conf-variant pick runs under its confs: with the ranker stubbed so
+    ``nobroadcast`` wins, the executed plan has no broadcast join although
+    the query's default plan broadcasts."""
+    from active_query_optimizer_spark.catalog import register_views
+    from active_query_optimizer_spark.pipelines.optimize import (
+        choose_plan, run_optimized)
+
+    register_views(spark, SF_SMALL)
+    sql = ("SELECT COUNT(*) FROM customer c, nation n "
+           "WHERE c.c_nationkey = n.n_nationkey")
+    default = spark.sql(sql)
+    expect = default.collect()
+    assert "BroadcastHashJoin" in EX.realized_join_strategies(default)
+    model = _MergeJoinRanker()
+    best, _ = choose_plan(spark, sql, model, strategies=())
+    assert best.variant == "nobroadcast"
+
+    frames = []  # every frame made through spark.sql; the last one runs
+    real_sql = spark.sql
+    monkeypatch.setattr(spark, "sql",
+                        lambda text: frames.append(real_sql(text)) or frames[-1])
+    rows = run_optimized(spark, sql, model, strategies=())
+    monkeypatch.undo()
+    realized = EX.realized_join_strategies(frames[-1])
+    assert realized and "BroadcastHashJoin" not in realized, realized
+    assert rows == expect
 
 
 def test_label_query_realized_strategies(spark):
